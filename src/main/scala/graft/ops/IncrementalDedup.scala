@@ -4,7 +4,6 @@ import java.nio.file.Path
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.queries.Tables
@@ -14,12 +13,11 @@ import graft.queries.Tables
  * maintained continuously as documents arrive, instead of recomputed from
  * scratch. This is the composition a production corpus pipeline actually
  * runs — the reference's flagship path is a streaming source→sink lifecycle
- * (`/root/reference/tests/test_delta_end_to_end.py:72-90`) and the dedup
- * family (n01→n38) is what the micro-batches must maintain. All
- * state-machine machinery (parts + markers, versioned snapshots, tiered
- * compaction levels, collision-bucket layouts, retention GC, crash
- * consistency) lives in [[IncrementalStateMachine]]; this class keeps the
- * text domain logic.
+ * (its Delta end-to-end test) and the dedup family (n01→n38) is what the
+ * micro-batches must maintain. The banded
+ * candidate and label-merge core lives in [[BandedDedupIndex]], the
+ * state-machine storage in [[IncrementalStateMachine]]; this class keeps
+ * the text payload, its verify kernel, and the manifest.
  *
  * Per micro-batch (`foreachBatch`, the d61 idempotent-write shape):
  *   1. compute the batch's shingle hashes, MinHash band hashes, and md5
@@ -27,120 +25,53 @@ import graft.queries.Tables
  *      ([[Dedup.wordShingles]] / [[Dedup.minHashSignature]] /
  *      [[Dedup.lshBands]]) — banding is per-document and deterministic, so
  *      candidate recall is batching-invariant;
- *   2. append them to the persisted index (one `b<batchId>` parquet part
- *      per table, overwrite mode + commit marker ⇒ checkpoint-replay
- *      idempotent, exactly the `IdempotentParquetWriter` contract);
- *   3. generate candidates STREAM-STATIC: batch bands ⋈ (index ∪ batch)
- *      on (band, bh) — every qualifying pair has at least one endpoint in
- *      the current batch, so each unordered pair is discovered exactly
- *      once across the run, in the batch where its younger member arrives;
- *   4. verify candidates with exact Jaccard ([[Dedup.verifyJaccard]]) and
- *      fold the new edges into the persisted cluster labels by CONTRACTING
- *      them through the current labels (endpoint → its component minimum)
- *      and running [[Dedup.minLabelComponents]] on the contracted graph —
- *      the graph of *touched components*, bounded by the batch's edge
- *      count, never the corpus. Labels are component-minimum doc_ids, so
- *      contraction preserves the global fixpoint: after every batch the
- *      label table equals what the batch algorithm would produce on all
- *      documents seen so far (bridging merges included — a batch that
- *      connects two existing clusters relabels the larger-min one, which
- *      can flip an old "keep" verdict to "near_dup", exactly as a batch
- *      recompute would);
- *   5. append the batch's (fp, min doc_id) keeper rows and arrival-time
+ *   2. generate stream-static candidates and verify them with exact
+ *      Jaccard ([[Dedup.verifyJaccard]]) against the `shingles` table,
+ *      pruned to the candidate endpoints' id buckets;
+ *   3. append the batch's parts (one `b<batchId>` parquet part per table,
+ *      overwrite mode + commit marker ⇒ checkpoint-replay idempotent,
+ *      exactly the `IdempotentParquetWriter` contract) and fold the edges
+ *      into the cluster labels — a batch that connects two existing
+ *      clusters relabels the larger-min one, which can flip an old "keep"
+ *      verdict to "near_dup", exactly as a batch recompute would;
+ *   4. append the batch's (fp, min doc_id) keeper rows and arrival-time
  *      verdicts for the batch's documents to their part tables.
  *
- * COLLISION-BUCKET PRUNING (the [[IncrementalEmbedIndex]] treatment):
- * `bands` levels are hive-bucketed on `hash(band, bh) % P` and the
- * candidate probe prunes to the batch's band-key buckets (round 11);
- * `shingles` levels are bucketed on `hash(doc_id) % P` and the exact
- * Jaccard verification prunes to the candidate endpoints' id buckets
- * (round 12 — listing-time pruning of the broadcast-candidate double
- * scan, not the rejected endpoint semi-join). `docs`/`manifest` compact
- * flat: they are only read corpus-wide (finalManifest / arrivalLog).
- *
- * Cluster labels live in the [[LabelLog]] relabel-log store and the
- * fingerprint keepers as min-resolved per-batch parts (round 13): both
- * were versioned snapshots through round 12, whose per-batch full
- * read+rewrite was O(store) — the last per-batch terms that grew with
- * index size. Now every batch writes only its own rows, lookups prune to
- * the batch's key buckets, and the full merge folds the relabel log /
- * collapses the keepers (path compression at the bin-pack). The expensive
- * stages — shingling, banding, candidate generation, verification — touch
- * only the batch and its collision partners, which is the entire point of
- * maintaining the index incrementally.
+ * `docs`/`manifest` compact flat: they are only read corpus-wide
+ * (finalManifest / arrivalLog). The fingerprint keepers are min-resolved
+ * per-batch parts, collapsed to one min row per fp at the full merge.
  *
  * Correctness claim (tested in `IncrementalDedupSpec`, oracle-gated as
  * n41): after `processAllAvailable`, [[IncrementalDedupIndex.finalManifest]]
  * equals the batch n38 manifest on the same documents — for ANY split of
- * the corpus into batches, because the edge set is batching-invariant
- * (step 3) and min-label contraction commutes with edge arrival order.
+ * the corpus into batches.
  */
 final class IncrementalDedupIndex(root: Path, threshold: Double = 0.8,
                                   bandBuckets: Int = 64,
                                   override protected val maxLevels: Int = 4,
                                   bucketMaxDirs: Int = 4096,
                                   idBuckets: Int = 64)
-  extends IncrementalStateMachine(root) {
+  extends BandedDedupIndex(root, "doc", bandBuckets, idBuckets, bucketMaxDirs) {
 
   private val DocsDdl = "doc_id BIGINT, source STRING, fp STRING"
   private val ShinglesDdl = "doc_id BIGINT, sh_hashes ARRAY<BIGINT>"
-  private val BandsDdl = "doc_id BIGINT, band INT, bh BIGINT"
-  private val AssignDdl = "doc_id BIGINT, lbl BIGINT"
   private val FpKeepDdl = "fp STRING, fp_keep BIGINT"
   private val ManifestDdl =
     "doc_id BIGINT, source STRING, verdict STRING, keep_doc BIGINT"
 
-  /** The band tree's hive-bucket column — the candidate probe's pruning
-    * key. */
-  private def bandBucketCol: Column =
-    pmod(xxhash64(col("band"), col("bh")), lit(bandBuckets.toLong))
+  override protected def partTables: Seq[PartTable] =
+    Seq(PartTable("docs", DocsDdl), idBucketed("shingles", ShinglesDdl),
+      bandsTable, PartTable("manifest", ManifestDdl)) ++ labelTables :+
+      PartTable("fpkeep", FpKeepDdl,
+        Some(Bucketing(fpBucketCol, idBuckets, bucketMaxDirs)))
 
-  /** The shingle table's hive-bucket column over a doc_id column — the
-    * verification read's pruning key. Sized by the shingle table's own
-    * row count (one row per doc — `idBuckets`), not the 16×-larger band
-    * table's (see the embed twin's note on file-sized buckets). */
-  private def idBucketCol(c: Column): Column =
-    pmod(xxhash64(c), lit(idBuckets.toLong))
-
-  override protected def partTables: Seq[PartTable] = Seq(
-    PartTable("docs", DocsDdl),
-    PartTable("shingles", ShinglesDdl,
-      Some(Bucketing(idBucketCol(col("doc_id")), idBuckets, bucketMaxDirs))),
-    PartTable("bands", BandsDdl,
-      Some(Bucketing(bandBucketCol, bandBuckets, bucketMaxDirs))),
-    PartTable("manifest", ManifestDdl),
-    // the relabel-log label store (see [[LabelLog]], the embed twin's
-    // note) plus the fingerprint keepers as min-resolved per-batch parts:
-    // both formerly versioned snapshots whose per-batch full rewrite was
-    // O(store) — now every batch writes only its own rows and readers
-    // resolve (label chains / group-min) over bucket-pruned reads
-    PartTable("assign", AssignDdl,
-      Some(Bucketing(idBucketCol(col("doc_id")), idBuckets, bucketMaxDirs))),
-    PartTable("relabel", LabelLog.RelabelDdl, trackNonempty = true),
-    PartTable("fpkeep", FpKeepDdl,
-      Some(Bucketing(fpBucketCol, idBuckets, bucketMaxDirs))))
-
-  override protected def snapTables: Seq[(String, String)] = Seq.empty
-
-  /** Full merges resolve the assignment level through the whole relabel
-    * log and empty the log level (path compression — the embed twin's
-    * contract), and collapse the fingerprint keepers to one min row per
-    * fp; all three are deterministic functions of committed state and
-    * content-equivalent under the tables' read-time resolutions. */
+  /** The label-store fold (see [[BandedDedupIndex]]), plus the fingerprint
+    * keepers collapsed to one min row per fp — content-equivalent under
+    * the keepers' read-time group-min. */
   override protected def fullMergeContent(spark: SparkSession, t: PartTable,
                                           df: DataFrame): DataFrame =
-    t.name match {
-      case "assign" => LabelLog.resolve(df,
-        liveRelabels(spark, Long.MaxValue, requireMarker = true))
-      case "relabel" => emptyDf(spark, LabelLog.RelabelDdl)
-      case "fpkeep" => df.groupBy("fp").agg(min(col("fp_keep")).as("fp_keep"))
-      case _ => df
-    }
-
-  private def liveRelabels(spark: SparkSession, max: Long,
-                           requireMarker: Boolean = false): DataFrame =
-    readParts(spark, "relabel", max, LabelLog.RelabelDdl,
-      requireMarker = requireMarker)
+    if (t.name == "fpkeep") df.groupBy("fp").agg(min(col("fp_keep")).as("fp_keep"))
+    else super.fullMergeContent(spark, t, df)
 
   /** The fingerprint-keeper table's hive-bucket column — the arrival
     * manifest's fp lookup prunes to the batch's fp buckets. */
@@ -156,65 +87,6 @@ final class IncrementalDedupIndex(root: Path, threshold: Double = 0.8,
     readParts(spark, "fpkeep", max, FpKeepDdl, requireMarker = requireMarker,
         pruneTo = pruneTo)
       .groupBy("fp").agg(min(col("fp_keep")).as("fp_keep"))
-
-  /** Assignments resolved through the relabel log, with the driver-side
-    * fast path (the embed twin's shape): skip the resolve machinery
-    * entirely when the log cannot hold rows. */
-  private def resolved(spark: SparkSession, assign: DataFrame, max: Long,
-                       requireMarker: Boolean = false): DataFrame =
-    if (!trackedHasData("relabel", max)) assign
-    else LabelLog.resolve(assign,
-      liveRelabels(spark, max, requireMarker = requireMarker))
-
-  /** The label view below `max`: assignments (optionally bucket-pruned —
-    * sound under the manifest's LEFT join, rows outside the pruned
-    * buckets cannot match the probe side) resolved through the live
-    * relabel log. */
-  private def labelView(spark: SparkSession, max: Long,
-                        pruneTo: Option[Seq[Long]] = None,
-                        requireMarker: Boolean = false): DataFrame =
-    resolved(spark, readParts(spark, "assign", max, AssignDdl,
-      requireMarker = requireMarker, pruneTo = pruneTo), max,
-      requireMarker = requireMarker)
-
-  /** The bounded driver-side label merge — the embed twin's
-    * [[IncrementalEmbedIndex]] `smallMerge`, on doc ids; see
-    * [[LabelLog.SmallMergeMaxEdges]] for the contract and
-    * `LabelLogProps` for the distributed-equivalence pin. */
-  private def smallMerge(spark: SparkSession, rows: Seq[(Long, Long)],
-                         batchId: Long): Unit = {
-    import spark.implicits._
-    val endpoints = rows.flatMap { case (a, b) => Seq(a, b) }.distinct
-    val bSet = endpoints.map(idBucketLocal).distinct
-    val cur = readParts(spark, "assign", batchId, AssignDdl,
-        pruneTo = Some(bSet).filter(_.size <= idBuckets / 2))
-      .filter(col("doc_id").isInCollection(endpoints))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val (newAssign, relabel) = LabelLog.deltasLocal(rows, cur)
-    newAssign.toDF("doc_id", "lbl").coalesce(1)
-      .write.mode("overwrite").parquet(partDir("assign", batchId).toString)
-    // never write an EMPTY relabel part (the trackNonempty contract) —
-    // emptiness is known driver-side here, no probe job
-    if (relabel.nonEmpty)
-      relabel.toDF("old", "new").coalesce(1)
-        .write.mode("overwrite").parquet(partDir("relabel", batchId).toString)
-  }
-
-  /** Driver-side twin of [[idBucketCol]] (seed-42 XXH64, floorMod). */
-  private def idBucketLocal(id: Long): Long =
-    java.lang.Math.floorMod(
-      org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(id, 42L),
-      idBuckets.toLong)
-
-  /** Dev/spec accessors (the text analogue of the embed probes). */
-  private[graft] def debugReadBands(spark: SparkSession, max: Long,
-                                    pruneTo: Option[Seq[Long]] = None): DataFrame =
-    readParts(spark, "bands", max, BandsDdl, pruneTo = pruneTo)
-  private[graft] def debugReadShingles(spark: SparkSession, max: Long,
-                                       pruneTo: Option[Seq[Long]] = None): DataFrame =
-    readParts(spark, "shingles", max, ShinglesDdl, pruneTo = pruneTo)
-  private[graft] def debugBandBucket: Column = bandBucketCol
-  private[graft] def debugIdBucket(c: Column): Column = idBucketCol(c)
 
   /** The `foreachBatch` entry point. Replay-idempotent: a committed batch
     * short-circuits; an interrupted one recomputes deterministically and
@@ -236,42 +108,11 @@ final class IncrementalDedupIndex(root: Path, threshold: Double = 0.8,
         explode(Dedup.lshBands(Dedup.minHashSignature(col("sh_hashes")))).as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
       .persist()
-    // candidate probe pruned to the batch's band-key buckets; exact
-    // verification pruned to the candidate endpoints' id buckets (see the
-    // class doc — same broadcast-candidate join shape, fewer leaf dirs).
-    // Endpoint pruning is attempted only in the TRICKLE regime (band
-    // pruning engaged): a bulk batch's endpoint set covers most buckets
-    // anyway, and its collect would force the candidate join once extra
-    // plus a persist (the embed twin measured that as the whole bulk-batch
-    // overhead at ×100).
-    val pbSet = pruneSet(bandsB, bandBucketCol, batchId, bandBuckets)
-    val tryEndpointPrune = pbSet.isDefined
-    val candidates0 = candidatePairs(spark, bandsB, batchId, pbSet)
-    val candidates = if (tryEndpointPrune) candidates0.persist() else candidates0
-    val shSet =
-      if (!tryEndpointPrune) None
-      else pruneSet(candidates,
-        explode(array(idBucketCol(col("doc_a")), idBucketCol(col("doc_b")))),
-        batchId, idBuckets)
-    // EAGER localCheckpoint, not persist (the embed twin's note): the
-    // label-merge actions below would each re-pay the candidate+verify
-    // pipeline's plan ANALYSIS; the checkpoint pins the batch-bounded
-    // edge set as a LogicalRDD. The edge COUNT rides the checkpoint job
-    // itself (round-19, the minLabelComponents Observation pattern): it
-    // drives both the small-merge dispatch and the has-edges gate,
-    // replacing the former limit-collect / limit(1).count() probe jobs
-    val edgeObs = org.apache.spark.sql.Observation()
-    val edges = Dedup.verifyJaccard(candidates,
-        readParts(spark, "shingles", batchId, ShinglesDdl, pruneTo = shSet)
-          .unionByName(sh),
-        threshold)
-      .select("doc_a", "doc_b")
-      .observe(edgeObs, count(lit(1)).as("n_edges"))
-      .localCheckpoint(true)
-    val nEdges = edgeObs.get.get("n_edges") match {
-      case Some(l: java.lang.Long) => l.longValue()
-      case _ => 0L
-    }
+    val cands = candidates(spark, bandsB, batchId)
+    val (edges, nEdges) = checkpointEdges(Dedup.verifyJaccard(cands.pairs,
+      readParts(spark, "shingles", batchId, ShinglesDdl,
+        pruneTo = cands.endpointBuckets).unionByName(sh),
+      threshold))
     try {
       val docsB = b.select(col("doc_id"), col("source"), md5(col("text")).as("fp"))
       // four independent jobs into distinct dirs — overlapped per guide
@@ -287,58 +128,7 @@ final class IncrementalDedupIndex(root: Path, threshold: Double = 0.8,
           .parquet(partDir("bands", batchId).toString),
         () => docsB.groupBy("fp").agg(min(col("doc_id")).as("fp_keep"))
           .write.mode("overwrite").parquet(partDir("fpkeep", batchId).toString))
-
-      // SMALL-MERGE dispatch (the embed twin's shape — see
-      // [[LabelLog.SmallMergeMaxEdges]]): trickle regime + empty relabel
-      // log ⇒ the merge runs driver-side over the edge set, collected
-      // only when the OBSERVED count is within the ceiling; bulk,
-      // over-ceiling, or nonempty-log batches keep the distributed path
-      val smallEdges =
-        if (nEdges > 0 && nEdges <= LabelLog.SmallMergeMaxEdges &&
-            tryEndpointPrune && !trackedHasData("relabel", batchId))
-          Some(edges.collect().toSeq.map(r => (r.getLong(0), r.getLong(1))))
-        else None
-      val hasEdges = nEdges > 0
-      if (hasEdges && smallEdges.isDefined) {
-        smallMerge(spark, smallEdges.get, batchId)
-      } else if (hasEdges) {
-        // relabel-log label merge (the embed twin's shape, see [[LabelLog]]):
-        // endpoint lookup pruned to the endpoints' id-hash buckets in the
-        // trickle regime, then write only the batch's own rows
-        val endpoints = edges.select(col("doc_a").as("doc_id"))
-          .unionByName(edges.select(col("doc_b").as("doc_id")))
-          .distinct().persist()
-        val aSet =
-          if (!tryEndpointPrune) None
-          else pruneSet(endpoints, idBucketCol(col("doc_id")), batchId, idBuckets)
-        // join the ENDPOINTS before resolving (the embed twin's order,
-        // round-13 ADVICE): resolving first would run the relabel hop
-        // over every assignment in the pruned buckets — the whole store
-        // when endpoint pruning is off — instead of the batch's endpoints
-        val cur = resolved(spark,
-          readParts(spark, "assign", batchId, AssignDdl, pruneTo = aSet)
-            .join(endpoints, "doc_id"), batchId)
-          .select(col("doc_id").as("id"), col("lbl")).persist()
-        val (newAssign, relabel) = LabelLog.deltas(
-          edges.select(col("doc_a").as("a"), col("doc_b").as("b")),
-          endpoints.select(col("doc_id").as("id")), cur)
-        newAssign.select(col("id").as("doc_id"), col("lbl"))
-          .write.mode("overwrite").parquet(partDir("assign", batchId).toString)
-        // never write an EMPTY relabel part (the trackNonempty contract —
-        // part existence ⇒ rows; emptiness is deterministic under replay).
-        // ONE probe job over the persisted relabel frame — the former
-        // cur.isEmpty pre-gate was a second job of the same size class on
-        // every edge-bearing batch with existing assignments (round-19)
-        val rel = relabel.persist()
-        if (rel.limit(1).count() > 0)
-          rel.write.mode("overwrite").parquet(partDir("relabel", batchId).toString)
-        rel.unpersist()
-        cur.unpersist(); endpoints.unpersist()
-      }
-
-      // fingerprint keepers: written in the parallel group above — the
-      // batch's own (fp, min doc_id) rows; readers group-min over the
-      // parts, so no corpus-wide rewrite and no change-gate join
+      mergeLabels(spark, edges, nEdges, batchId, cands.trickle)
 
       // arrival-time verdicts for THIS batch's documents (the append-only
       // audit log; a later bridging merge can supersede an old doc's
@@ -353,10 +143,10 @@ final class IncrementalDedupIndex(root: Path, threshold: Double = 0.8,
       // doc can well be assigned by a later batch's bridging edge; those
       // rows land in that batch's part and are irrelevant to this join.)
       val fpSet =
-        if (!tryEndpointPrune) None
+        if (!cands.trickle) None
         else pruneSet(docsB, fpBucketCol, batchId + 1, idBuckets)
       val batchLabels =
-        if (hasEdges) spark.read.schema(StructType.fromDDL(AssignDdl))
+        if (nEdges > 0) spark.read.schema(StructType.fromDDL(AssignDdl))
           .parquet(partDir("assign", batchId).toString)
         else emptyDf(spark, AssignDdl)
       manifestFor(docsB, fpView(spark, batchId + 1, pruneTo = fpSet),
@@ -365,30 +155,9 @@ final class IncrementalDedupIndex(root: Path, threshold: Double = 0.8,
 
       commitBatch(batchId)
     } finally {
-      // edges is localCheckpointed — ContextCleaner-managed, no unpersist
-      if (tryEndpointPrune) candidates.unpersist()
+      if (cands.trickle) cands.pairs.unpersist()
       bandsB.unpersist(); sh.unpersist(); b.unpersist()
     }
-  }
-
-  /** Stream-static candidate generation: batch bands against the committed
-    * index plus the batch itself (within-batch pairs), deduped on the
-    * normalized unordered pair. Every pair with a shared band has at least
-    * one endpoint in SOME batch's `bandsB`, and the older endpoint is in
-    * that batch's index view — so the union over batches of these candidate
-    * sets is exactly the batch algorithm's candidate set. The level read
-    * prunes to the batch's band-key buckets (a batch key can only collide
-    * inside its own bucket). */
-  private def candidatePairs(spark: SparkSession, bandsB: DataFrame,
-                             batchId: Long,
-                             pbSet: Option[Seq[Long]]): DataFrame = {
-    val all = readParts(spark, "bands", batchId, BandsDdl,
-      pruneTo = pbSet).unionByName(bandsB)
-    bandsB.as("x").join(all.as("y"), Seq("band", "bh"))
-      .filter(col("x.doc_id") =!= col("y.doc_id"))
-      .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
-        greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"))
-      .distinct()
   }
 
   /** The n38 verdict CASE ([[Dedup.manifestVerdictCols]], the shared
@@ -411,7 +180,7 @@ final class IncrementalDedupIndex(root: Path, threshold: Double = 0.8,
   def finalManifest(spark: SparkSession): DataFrame =
     manifestFor(readParts(spark, "docs", Long.MaxValue, DocsDdl, requireMarker = true),
       fpView(spark, Long.MaxValue, requireMarker = true),
-      labelView(spark, Long.MaxValue, requireMarker = true))
+      committedLabels(spark))
 
   /** The append-only arrival audit log: one verdict row per document,
     * written in the batch that ingested it, judged against the state AS OF

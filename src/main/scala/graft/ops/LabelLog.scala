@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 /**
  * The relabel-log label store shared by the incremental dedup indexes
- * (text [[IncrementalDedupIndex]], embeddings/media
- * [[IncrementalEmbedIndex]]) — round-13's structural fix for the last
- * per-batch term that grew with index size.
+ * through [[BandedDedupIndex]] (text [[IncrementalDedupIndex]],
+ * embeddings/media [[IncrementalEmbedIndex]]) — round-13's structural
+ * fix for the last per-batch term that grew with index size.
  *
  * Through round 12 cluster labels lived in a versioned snapshot that every
  * edge-bearing batch read and REWROTE in full: O(label store) per batch,

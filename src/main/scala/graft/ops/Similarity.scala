@@ -447,10 +447,9 @@ object Similarity {
     * the per-task SHJ build grows with how many (cell, salt) groups hash
     * into one partition (each group is one full cell's index rows) — at
     * cluster scale size the shuffle width to ≥ cells·s for this join so
-    * each task builds ~one cell. Env-tunable for cluster geometries; the
-    * default keeps 8·16 = 128 granules ≈ 4×w locally. */
-  private val CellJoinSaltWidth: Int =
-    sys.env.get("SPARK_GRAFT_CELL_SALT").map(_.toInt).getOrElse(16)
+    * each task builds ~one cell. 16 keeps 8·16 = 128 granules ≈ 4×w
+    * locally. */
+  private val CellJoinSaltWidth: Int = 16
 
   /** The cell equi-join with the crossover applied. Above the threshold
     * the join is hinted to shuffled-hash — so neither static planning

@@ -11,11 +11,11 @@ import graft.ops.{Dedup, IncrementalEmbedDedup, IncrementalEmbedIndex}
 /**
  * Dev tool: Spark-job-level attribution of one EDGE-BEARING trickle
  * batch's fixed cost (round 14). The gated replays' phase attribution
- * says ~90% of their wall clock is the per-micro-batch floor; the
- * breakdown probe says an edge-bearing trickle batch costs ~6-7 s at
- * EVERY index scale — flat, but high. This probe names the jobs inside
- * that floor: it builds the ×1 index exactly as ProbeEmbedBatchBreakdown
- * does, registers a listener, runs ONE planted-dup trickle batch, and
+ * says ~90% of their wall clock is the per-micro-batch floor, and an
+ * edge-bearing trickle batch costs ~6-7 s at EVERY index scale — flat,
+ * but high (BASELINE.md's per-stage breakdown). This probe names the jobs
+ * inside that floor: it builds the ×1 embedding index from four hash
+ * batches, registers a listener, runs ONE planted-dup trickle batch, and
  * prints every job's duration with its call site.
  *
  * Usage: runMain graft.tools.ProbeBatchJobs [sfDir]

@@ -26,15 +26,19 @@ object Sessions {
     * forwarded to Spark conf only fails at the first shuffle with an opaque
     * error rather than at session construction, naming the variable). */
   private def envInt(name: String, default: Int): Int =
-    sys.env.get(name).map { s =>
-      val v = try s.toInt catch {
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$name must be a positive integer, got '$s'")
-      }
-      require(v > 0, s"$name must be a positive integer, got '$s'")
-      v
-    }.getOrElse(default)
+    sys.env.get(name).map(positiveInt(name, _)).getOrElse(default)
+
+  /** `raw` as a positive integer, or an `IllegalArgumentException` naming
+    * the variable `name` it came from. */
+  private[graft] def positiveInt(name: String, raw: String): Int = {
+    val v = try raw.toInt catch {
+      case _: NumberFormatException =>
+        throw new IllegalArgumentException(
+          s"$name must be a positive integer, got '$raw'")
+    }
+    require(v > 0, s"$name must be a positive integer, got '$raw'")
+    v
+  }
 
   def local(cpus: Int, logLevel: String = "WARN"): SparkSession = {
     val builder = SparkSession.builder()
@@ -76,6 +80,5 @@ object Sessions {
 
   /** [[local]] sized from the `SPARK_GRAFT_CPUS` env var. */
   def fromEnv(default: Int, logLevel: String = "WARN"): SparkSession =
-    local(sys.env.getOrElse("SPARK_GRAFT_CPUS", default.toString).toInt,
-      logLevel)
+    local(envInt("SPARK_GRAFT_CPUS", default), logLevel)
 }

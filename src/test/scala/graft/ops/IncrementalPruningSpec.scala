@@ -32,7 +32,7 @@ class IncrementalPruningSpec extends AnyFunSuite with graft.SoakTagged {
 
     // the probe's pruned read: a trickle batch's bucket set
     val someBuckets = Seq(0L, 3L, 7L)
-    val pruned = index.debugReadBands(spark, Long.MaxValue,
+    val pruned = index.debugRead(spark, "bands", Long.MaxValue,
       pruneTo = Some(someBuckets))
     val p = pruned.queryExecution.executedPlan.toString
     val partFilters = "PartitionFilters: \\[([^\\]]*)\\]".r.findFirstMatchIn(p)
@@ -45,7 +45,7 @@ class IncrementalPruningSpec extends AnyFunSuite with graft.SoakTagged {
     assert(!pushed.get.group(1).contains("pb"), p)
 
     // and the pruned view IS the bucket restriction of the full view
-    val expected = index.debugReadBands(spark, Long.MaxValue)
+    val expected = index.debugRead(spark, "bands", Long.MaxValue)
       .filter(index.debugBandBucket.isin(someBuckets: _*))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val got = pruned.collect()
@@ -93,7 +93,7 @@ class IncrementalPruningSpec extends AnyFunSuite with graft.SoakTagged {
     assert(index.compact(spark).contains(1L))
 
     val someBuckets = Seq(1L, 4L, 9L)
-    val pruned = index.debugReadUnits(spark, Long.MaxValue,
+    val pruned = index.debugRead(spark, "units", Long.MaxValue,
       pruneTo = Some(someBuckets))
     val p = pruned.queryExecution.executedPlan.toString
     val partFilters = "PartitionFilters: \\[([^\\]]*)\\]".r.findFirstMatchIn(p)
@@ -104,7 +104,7 @@ class IncrementalPruningSpec extends AnyFunSuite with graft.SoakTagged {
     assert(pushed.isDefined && !pushed.get.group(1).contains("pb"), p)
 
     // value parity: the pruned view IS the bucket restriction
-    val expected = index.debugReadUnits(spark, Long.MaxValue)
+    val expected = index.debugRead(spark, "units", Long.MaxValue)
       .filter(index.debugIdBucket(col("vec_id")).isin(someBuckets: _*))
       .collect().map(_.getLong(0)).toSet
     val got = pruned.collect().map(_.getLong(0)).toSet
@@ -221,7 +221,7 @@ class IncrementalPruningSpec extends AnyFunSuite with graft.SoakTagged {
 
     // plan shape of the pruned shingle read (the verification scan)
     val someBuckets = Seq(0L, 2L)
-    val p = index.debugReadShingles(spark, Long.MaxValue,
+    val p = index.debugRead(spark, "shingles", Long.MaxValue,
       pruneTo = Some(someBuckets)).queryExecution.executedPlan.toString
     val partFilters = "PartitionFilters: \\[([^\\]]*)\\]".r.findFirstMatchIn(p)
     assert(partFilters.isDefined && partFilters.get.group(1).contains("pb"),
@@ -276,13 +276,13 @@ class IncrementalPruningSpec extends AnyFunSuite with graft.SoakTagged {
 
     // pruned read: PartitionFilters over the partition cols, value parity
     val someBuckets = Seq(0L, 5L, 130L, 255L)
-    val pruned = index.debugReadBands(spark, Long.MaxValue,
+    val pruned = index.debugRead(spark, "bands", Long.MaxValue,
       pruneTo = Some(someBuckets))
     val p = pruned.queryExecution.executedPlan.toString
     val partFilters = "PartitionFilters: \\[([^\\]]*)\\]".r.findFirstMatchIn(p)
     assert(partFilters.isDefined && partFilters.get.group(1).contains("pb"),
       s"two-level scan not partition-pruned:\n$p")
-    val expected = index.debugReadBands(spark, Long.MaxValue)
+    val expected = index.debugRead(spark, "bands", Long.MaxValue)
       .filter(index.debugBandBucket.isin(someBuckets: _*))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val got = pruned.collect()

@@ -131,9 +131,7 @@ object LabelLogProps extends Properties("LabelLog") {
       val sparkSide = ids.toDF("id")
         .select(pmod(xxhash64(col("id")), lit(n.toLong)))
         .collect().map(_.getLong(0)).toSeq
-      val driverSide = ids.map(id => java.lang.Math.floorMod(
-        org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(id, 42L),
-        n.toLong))
+      val driverSide = ids.map(BandedDedupIndex.idBucketLocal(_, n))
       sparkSide == driverSide
     }
 }
