@@ -287,12 +287,13 @@ final class IncrementalIvfPqIndex(root: Path,
    * table from the persisted quantizer — restart-stable by the same
    * conflict-refusal contract as every other read), the per-query R-cut
    * shortlist fetches full vectors from the SOURCE table by shuffle-hash
-   * id joins, and the exact integer re-rank cuts to k
-   * ([[Similarity.rerankJoinTail]] — the shared n78/n80 tail). At 100 TB
-   * this is the nightly-dedup shape: the join-against-the-index touches
-   * state CODES (32 B/row) corpus-wide and 512-byte vectors only n·R
-   * times. Requires the quantizer (SDC needs one codebook for all rows);
-   * with the zero-centroid raw-codebook quantizer the committed codes
+   * id joins, and the exact integer re-rank cuts to k — the batch
+   * pipeline's [[Similarity.knnCandidates]] stage at R (plain cell join,
+   * as n80) and [[Similarity.rerankJoinTail]]. At 100 TB this is the
+   * nightly-dedup shape: the join-against-the-index touches state CODES
+   * (32 B/row) corpus-wide and 512-byte vectors only n·R times.
+   * Requires the quantizer (SDC needs one codebook for all rows); with
+   * the zero-centroid raw-codebook quantizer the committed codes
    * equal the batch n80 encode per row, so the join equals the batch n80
    * plan EXACTLY (gated in `IncrementalAnnSpec`).
    */
@@ -311,16 +312,10 @@ final class IncrementalIvfPqIndex(root: Path,
       .select(col("vec_id"), col("u"), col("pc").cast("long").as("cell"))
     val index = st.select(col("vec_id").as("nbr"), col("codes").as("un"),
       col("cell"))
-    val cands = probes.join(index, "cell")
-      .filter(col("vec_id") =!= col("nbr"))
-      .withColumn("sdist", ProductQuantization.sdc(col("u"), col("un"),
-        pt, nSub, tq.nCode))
-    val shortlist = graft.plans.TopKPerKey(
-      cands.select(col("vec_id"), col("nbr"), col("sdist")),
-      Seq(col("vec_id")), Seq(col("sdist").asc_nulls_last, col("nbr")), r)
-      .filter(col("sdist").isNotNull)
-      .select("vec_id", "nbr")
-    Similarity.rerankJoinTail(vectors, shortlist, k)
+    val shortlist = Similarity.knnCandidates(probes, index, r,
+      (a, b) => ProductQuantization.sdc(a, b, pt, nSub, tq.nCode),
+      "sdist", ascending = true, largeProbe = false)
+    Similarity.rerankJoinTail(vectors, shortlist.select("vec_id", "nbr"), k)
   }
 
   /** Dev/spec accessor: the full committed codes table. */

@@ -37,8 +37,9 @@ import graft.queries.Tables
  * Correctness claim (oracle-gated as n71): encode, cell, and probe set
  * are deterministic per row and batching-independent, so after
  * `processAllAvailable` the committed codes table equals the batch n68
- * index EXACTLY for any batching, and [[knnJoin]] — the
- * [[Similarity.knnJoinVerify]] tail over the stored probe sets — equals
+ * index EXACTLY for any batching, and [[knnJoin]] — the batch
+ * candidate stage and rank window ([[Similarity.knnJoinVerify]]) over
+ * the stored probe sets — equals
  * the batch n68 join: the query hash-matches
  * [[Similarity.sq8KnnJoinOracle]] verbatim (the n41/n52/n63/n67
  * pattern). Convergence, replay idempotence, probe-cut parity, and the
@@ -87,7 +88,8 @@ final class IncrementalSq8Index(root: Path,
     * STORED per-vector probe sets (no TopKPerKey shuffle — the cut
     * happened at ingest), index side is the cell-keyed codes, verify is
     * the codegen [[graft.functions.Sq8DotExpr]] integer dot — the
-    * [[Similarity.knnJoinVerify]] tail the batch n68 runs. */
+    * [[Similarity.knnJoinVerify]] stages the batch n68 runs after its
+    * probe cut. */
   def knnJoin(spark: SparkSession, k: Int = 3): DataFrame = {
     val st = readParts(spark, "codes", Long.MaxValue, CodesDdl,
       requireMarker = true)

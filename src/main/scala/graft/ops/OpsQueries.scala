@@ -76,8 +76,9 @@ object OpsQueries {
     "n58_streaming_media_clusters" ->
       ((s, d) => Multimodal.streamingMediaClustersQuery(s, d)),
     "n59_media_pipeline" -> (Multimodal.mediaPipelineQuery _),
-    // the deterministic-quantizer twin of n42: same knnJoinCore plan,
-    // md5-derived cells instead of trained KMeans ⇒ hash-checked
+    // the deterministic-quantizer twin of n42: same probeCut →
+    // knnJoinVerify plan, md5-derived cells instead of trained KMeans ⇒
+    // hash-checked
     "n60_knn_join_det" -> (Similarity.knnJoinDetQuery _),
     // IVF-PQ: the memory-bounded ANN scan (codes + integer ADC ranking)
     "n61_ivf_pq" -> (Similarity.ivfPqQuery _),

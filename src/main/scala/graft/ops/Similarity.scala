@@ -400,8 +400,10 @@ object Similarity {
         .select(col("vec_id"), col("u"), col("cell"),
           graft.functions.DotProduct(col("u"), col("ctr")).as("ccos"))
     }
-    knnJoinCore(scoredCells.withColumnRenamed("ccos", "score"), index,
-      k, nProbe, largeProbe = cellJoinLargeProbe(emb))
+    knnJoinVerify(
+      probeCut(scoredCells.withColumnRenamed("ccos", "score"), nProbe), index,
+      k, graft.functions.DotProduct(_, _), "cosine", ascending = false,
+      largeProbe = cellJoinLargeProbe(emb))
   }
 
   /** Size-aware join-strategy crossover for the kNN-join family's cell
@@ -480,65 +482,85 @@ object Similarity {
         .drop("salt")
     }
 
-  /** The shared tail of the batched kNN join — both the trained-KMeans
-    * n42 and its deterministic-quantizer twin n60 run exactly this plan:
-    * per-query nProbe-cell cut ([[graft.plans.TopKPerKey]], bounded heap),
-    * equi-join on cell against the cell-partitioned index (each query
-    * moves nProbe times, each index vector once — never the n² pair
-    * space), exact-cosine scoring (codegen [[graft.functions.DotProduct]]),
-    * and a second TopKPerKey cut to k per query. `scoredCells` carries
-    * (vec_id, u, cell, score); `index` carries (cell, nbr, un). The
-    * verify score is pluggable: n42 ranks on the exact float cosine
-    * (codegen DotProduct); the n60 twin ranks on an order-independent
-    * integer quantized dot so the oracle reproduces it bit-for-bit.
-    * `largeProbe` engages the [[cellJoinLargeProbe]] crossover. */
-  private def knnJoinCore(scoredCells: DataFrame, index: DataFrame,
-                          k: Int, nProbe: Int,
-                          verify: (Column, Column) => Column =
-                            graft.functions.DotProduct(_, _),
-                          scoreName: String = "cosine",
-                          ascending: Boolean = false,
-                          largeProbe: Boolean = false): DataFrame = {
-    val probed = graft.plans.TopKPerKey(scoredCells, Seq(col("vec_id")),
-      Seq(col("score").desc, col("cell")), nProbe)
-    knnJoinVerify(probed, index, k, verify, scoreName, ascending, largeProbe)
+  /** The probe and index sides of every kNN join over the md5 IVF cells
+    * ([[ivfDirs]]): `scored` is (vec_id, u, cell, score) — one row per
+    * cell, scored by the integer [[graft.functions.QuantizedDots]] dot
+    * that [[probeCut]] ranks — and `index` is (nbr, un, cell) on each
+    * vector's own assignment cell ([[ivfCellCol]]). `v` is the double view
+    * of `embedding`; `probeEnc`/`indexEnc` are the two sides' encodings
+    * (unit vector, SQ8 or PQ codes, or the raw integer vector). They are
+    * by-name, each built where its side is selected (index side first),
+    * which keeps the lambda-variable numbering of the plans unchanged. */
+  private def ivfProbeSides(emb: DataFrame, v: Column, probeEnc: => Column,
+                            indexEnc: => Column): (DataFrame, DataFrame) = {
+    val dots = graft.functions.QuantizedDots(v, ivfDirs, 64, IvfNList)
+    val index = emb.select(col("vec_id").as("nbr"), indexEnc.as("un"),
+      ivfCellCol(v).cast("int").as("cell"))
+    val scored = emb.select(col("vec_id"), probeEnc.as("u"),
+      posexplode(dots).as(Seq("cell", "score")))
+    (scored, index)
   }
 
-  /** The join→verify→top-k tail of [[knnJoinCore]], shared with the
-    * incremental n71 index, whose probe cut is precomputed AT INGEST
-    * (the per-row probed-cells array) — the streaming form skips the
-    * first TopKPerKey shuffle entirely. `probed` carries
-    * (vec_id, u, cell) with ≤ nProbe rows per query. */
-  private[graft] def knnJoinVerify(probed: DataFrame, index: DataFrame,
-                                   k: Int,
+  /** The per-query nProbe-cell cut ([[graft.plans.TopKPerKey]], bounded
+    * heap) over a (vec_id, u, cell, score) stream — the probe side of
+    * every batched kNN join. */
+  private def probeCut(scored: DataFrame, nProbe: Int): DataFrame =
+    graft.plans.TopKPerKey(scored, Seq(col("vec_id")),
+      Seq(col("score").desc, col("cell")), nProbe)
+
+  private def rankOrder(scoreName: String, ascending: Boolean): Column =
+    if (ascending) col(scoreName).asc_nulls_last else col(scoreName).desc
+
+  /** The candidate stage of every IVF kNN join: equi-join on cell against
+    * the cell-keyed index (each query moves nProbe times, each index
+    * vector once — never the n² pair space), with the
+    * [[cellJoinLargeProbe]] crossover when `largeProbe`; drop self-pairs;
+    * score each pair with the `verify` kernel as `scoreName`; cut to the
+    * `n` best per query with [[graft.plans.TopKPerKey]] — k for a
+    * one-stage join, the shortlist depth R for a two-stage one. `probed`
+    * carries (vec_id, u, cell) with ≤ nProbe rows per query, `index`
+    * (cell, nbr, un); the result is (vec_id, nbr, scoreName).
+    *
+    * `ascending` ranks DISTANCES, where a defensive-null score would sort
+    * nulls-first into the cut (the n61 ADC lesson): rank NULLS LAST so a
+    * malformed row can never displace a genuine candidate, and drop any
+    * null stragglers AFTER the cut (≤ n rows per query). A pre-cut
+    * isNotNull filter instead gets PUSHED INTO the join condition, where
+    * it re-evaluates the verify kernel for every candidate pair and breaks
+    * the join→project→heap codegen pipeline — measured 42 s vs 11 s on a
+    * 200M-pair corpus (ProbePqJoinScale, BASELINE r15). */
+  private[graft] def knnCandidates(probed: DataFrame, index: DataFrame,
+                                   n: Int,
                                    verify: (Column, Column) => Column,
-                                   scoreName: String,
-                                   ascending: Boolean,
-                                   largeProbe: Boolean = false): DataFrame = {
-    // ascending ranks DISTANCES, where a defensive-null score would sort
-    // nulls-first into the top-k (the n61 ADC lesson) — rank NULLS LAST
-    // so a malformed row can never displace a genuine candidate, and
-    // drop any null stragglers AFTER the cut (≤ n·k rows). A pre-cut
-    // isNotNull filter instead gets PUSHED INTO the join condition,
-    // where it re-evaluates the verify kernel for every candidate pair
-    // and breaks the join→project→heap codegen pipeline — measured 42 s
-    // vs 11 s on a 200M-pair corpus (ProbePqJoinScale, BASELINE r15).
-    val ord = if (ascending) col(scoreName).asc_nulls_last
-              else col(scoreName).desc
+                                   scoreName: String, ascending: Boolean,
+                                   largeProbe: Boolean): DataFrame = {
     val cands = cellJoinWithCrossover(
         probed.select(col("vec_id"), col("u"), col("cell")), index, largeProbe)
       .filter(col("vec_id") =!= col("nbr"))
       .withColumn(scoreName, verify(col("u"), col("un")))
     val top = graft.plans.TopKPerKey(cands.select("vec_id", "nbr", scoreName),
-      Seq(col("vec_id")), Seq(ord, col("nbr")), k)
-    val kept = if (ascending) top.filter(col(scoreName).isNotNull) else top
-    kept
+      Seq(col("vec_id")), Seq(rankOrder(scoreName, ascending), col("nbr")), n)
+    if (ascending) top.filter(col(scoreName).isNotNull) else top
+  }
+
+  /** The one-stage IVF kNN join: [[knnCandidates]] at k, then the rank
+    * window — (vec_id, rank, nbr, scoreName) ordered by (vec_id, rank).
+    * `probed` is a [[probeCut]] output, or, for the incremental n71
+    * index, the probe sets it precomputed AT INGEST — the streaming form
+    * skips the probe-side TopKPerKey shuffle entirely. */
+  private[graft] def knnJoinVerify(probed: DataFrame, index: DataFrame,
+                                   k: Int,
+                                   verify: (Column, Column) => Column,
+                                   scoreName: String,
+                                   ascending: Boolean,
+                                   largeProbe: Boolean = false): DataFrame =
+    knnCandidates(probed, index, k, verify, scoreName, ascending, largeProbe)
       .withColumn("rank", row_number().over(org.apache.spark.sql.expressions
-        .Window.partitionBy("vec_id").orderBy(ord, col("nbr")))
+        .Window.partitionBy("vec_id")
+        .orderBy(rankOrder(scoreName, ascending), col("nbr")))
         .cast("long"))
       .select(col("vec_id"), col("rank"), col("nbr"), col(scoreName))
       .orderBy("vec_id", "rank")
-  }
 
   /** n42: the embeddings table as BOTH query and index side (directly
     * comparable to the exact n39 graph). Seed-dependent through KMeans ⇒
@@ -549,9 +571,10 @@ object Similarity {
   /**
    * n60 — the batched kNN join on the DETERMINISTIC coarse quantizer (the
    * n06/n07 md5 treatment applied to n42, round-13 verdict #7): the same
-   * [[knnJoinCore]] plan as the trained-KMeans n42 — TopKPerKey nProbe-cell
-   * probe, cell equi-join, exact-cosine verify, TopKPerKey top-k — but with
-   * the [[ivfDirs]] md5-derived directions as the cells and the integer
+   * [[probeCut]] → [[knnJoinVerify]] plan as the trained-KMeans n42 —
+   * TopKPerKey nProbe-cell probe, cell equi-join, verify, TopKPerKey
+   * top-k — over [[ivfProbeSides]]: the [[ivfDirs]] md5-derived
+   * directions as the cells and the integer
    * [[graft.functions.QuantizedDots]] scores for assignment/probing, so a
    * DuckDB oracle reproduces the cell structure bit-for-bit and the whole
    * join is HASH-checked. The verify rank is an order-independent BIGINT
@@ -575,23 +598,16 @@ object Similarity {
   def knnJoinDet(emb: DataFrame, k: Int = 3,
                  nProbe: Int = IvfNProbe): DataFrame = {
     val v = transform(col("embedding"), x => x.cast("double"))
-    val dots = graft.functions.QuantizedDots(v, ivfDirs, 64, IvfNList)
-    def quantUnit(c: Column): Column =
+    def quantUnit: Column =
       // floor() yields BIGINT; back to double for the codegen DotProduct
       // (the values are integral, so the cast is exact)
-      transform(Dedup.unitVector(c), x =>
+      transform(Dedup.unitVector(col("embedding")), x =>
         floor(x * lit(1048576.0)).cast("double"))
-    // argmax cell over integer dots (ties to the smallest index) — the
-    // ivfTopK assignment, keyed for the index side of the join
-    val index = emb.select(col("vec_id").as("nbr"),
-      quantUnit(col("embedding")).as("un"),
-      ivfCellCol(v).cast("int").as("cell"))
-    val scored = emb
-      .select(col("vec_id"), quantUnit(col("embedding")).as("u"),
-        posexplode(dots).as(Seq("cell", "score")))
-    knnJoinCore(scored, index, k, nProbe,
+    val (scored, index) = ivfProbeSides(emb, v, quantUnit, quantUnit)
+    knnJoinVerify(probeCut(scored, nProbe), index, k,
       verify = (ua, ub) => graft.functions.DotProduct(ua, ub).cast("long"),
-      scoreName = "score_q", largeProbe = cellJoinLargeProbe(emb))
+      scoreName = "score_q", ascending = false,
+      largeProbe = cellJoinLargeProbe(emb))
   }
 
   def knnJoinDetQuery(spark: SparkSession, dir: String): DataFrame =
@@ -693,13 +709,8 @@ object Similarity {
   def pqKnnJoin(emb: DataFrame, k: Int = 3,
                 nProbe: Int = IvfNProbe): DataFrame = {
     val v = transform(col("embedding"), x => x.cast("double"))
-    val dots = graft.functions.QuantizedDots(v, ivfDirs, 64, IvfNList)
-    val index = emb.select(col("vec_id").as("nbr"),
-      pqEncodeCol(v).as("un"),
-      ivfCellCol(v).cast("int").as("cell"))
-    val scored = emb.select(col("vec_id"), pqEncodeCol(v).as("u"),
-      posexplode(dots).as(Seq("cell", "score")))
-    knnJoinCore(scored, index, k, nProbe,
+    val (scored, index) = ivfProbeSides(emb, v, pqEncodeCol(v), pqEncodeCol(v))
+    knnJoinVerify(probeCut(scored, nProbe), index, k,
       verify = (a, b) => graft.functions.ProductQuantization
         .sdc(a, b, pqPairTable, PqNSub, PqNCode),
       scoreName = "sdist", ascending = true,
@@ -708,27 +719,6 @@ object Similarity {
 
   def pqKnnJoinQuery(spark: SparkSession, dir: String): DataFrame =
     pqKnnJoin(embeddings(spark, dir))
-
-  /** Dev-only variant with a pluggable verify (cost isolation probes). */
-  private[graft] def pqKnnJoinDev(emb: DataFrame,
-                                  verify: (Column, Column) => Column,
-                                  k: Int = 3,
-                                  nProbe: Int = IvfNProbe,
-                                  breakIndexStage: Boolean = false,
-                                  mergeJoin: Boolean = false,
-                                  largeProbe: Boolean = false): DataFrame = {
-    val v = transform(col("embedding"), x => x.cast("double"))
-    val dots = graft.functions.QuantizedDots(v, ivfDirs, 64, IvfNList)
-    val index0 = emb.select(col("vec_id").as("nbr"),
-      pqEncodeCol(v).as("un"),
-      ivfCellCol(v).cast("int").as("cell"))
-    val index1 = if (breakIndexStage) index0.repartition(col("cell")) else index0
-    val index = if (mergeJoin) index1.hint("merge") else index1
-    val scored = emb.select(col("vec_id"), pqEncodeCol(v).as("u"),
-      posexplode(dots).as(Seq("cell", "score")))
-    knnJoinCore(scored, index, k, nProbe, verify,
-      scoreName = "sdist", ascending = true, largeProbe = largeProbe)
-  }
 
   /** The n65 twin in DuckDB: the [[knnJoinDetOracle]] cell structure
     * (md5 dirs, BIGINT dots, per-vector assignment + nProbe probe), the
@@ -813,7 +803,7 @@ object Similarity {
 
   /**
    * n68 — the batched kNN join on INT8 scalar-quantized vectors (the
-   * FAISS "SQ8" layout): the n60 [[knnJoinCore]] plan with the verify
+   * FAISS "SQ8" layout): the n60 [[knnJoinVerify]] plan with the verify
    * step scanning 64-byte int8 code BINARYs instead of 64-double unit
    * vectors. The middle rung of the compression ladder the family now
    * spans — n60 floats (512 B/row, exact), n68 SQ8 (64 B/row, ×8
@@ -835,17 +825,13 @@ object Similarity {
   def sq8KnnJoin(emb: DataFrame, k: Int = 3,
                  nProbe: Int = IvfNProbe): DataFrame = {
     val v = transform(col("embedding"), x => x.cast("double"))
-    val dots = graft.functions.QuantizedDots(v, ivfDirs, 64, IvfNList)
-    def codes(c: Column): Column =
-      graft.functions.ScalarQuantization.encode(Dedup.unitVector(c), 64)
-    val index = emb.select(col("vec_id").as("nbr"),
-      codes(col("embedding")).as("un"),
-      ivfCellCol(v).cast("int").as("cell"))
-    val scored = emb.select(col("vec_id"), codes(col("embedding")).as("u"),
-      posexplode(dots).as(Seq("cell", "score")))
-    knnJoinCore(scored, index, k, nProbe,
+    def codes: Column = graft.functions.ScalarQuantization
+      .encode(Dedup.unitVector(col("embedding")), 64)
+    val (scored, index) = ivfProbeSides(emb, v, codes, codes)
+    knnJoinVerify(probeCut(scored, nProbe), index, k,
       verify = (a, b) => graft.functions.ScalarQuantization.dot(a, b),
-      scoreName = "sq8dot", largeProbe = cellJoinLargeProbe(emb))
+      scoreName = "sq8dot", ascending = false,
+      largeProbe = cellJoinLargeProbe(emb))
   }
 
   def sq8KnnJoinQuery(spark: SparkSession, dir: String): DataFrame =
@@ -958,44 +944,46 @@ object Similarity {
   def pqKnnJoinRerank(emb: DataFrame, k: Int = 3,
                       r: Int = PqJoinRerankR,
                       nProbe: Int = IvfNProbe): DataFrame =
-    pqKnnJoinRerankWith(emb, pqCodebook, PqNCode, pqPairTable, k, r, nProbe)
+    pqRerankJoin(emb, pqCodebook, PqNCode, asymmetric = false, k, r, nProbe)
 
-  /** The shared two-stage join plan, parameterized on the codebook —
-    * n78 passes the md5 [[pqCodebook]] (oracle-reproducible), n80 the
-    * raw Lloyd-trained k*=256 one (the n61/n66 pairing at join scale).
-    * The SDC pair table rides in the task binary, which Spark itself
-    * broadcasts once per stage — at k*=256 that is nSub·256² longs
-    * (4 MiB), the FAISS-resident table size, NOT a per-row or per-task
-    * cost; at k*=16 it is 16 KiB. */
-  private def pqKnnJoinRerankWith(emb: DataFrame, codebook: Array[Long],
-                                  nCode: Int, pairTable: Array[Long],
-                                  k: Int, r: Int,
-                                  nProbe: Int): DataFrame = {
+  /** The two-stage join plan shared by n78/n80/n81/n84, parameterized on
+    * the codebook — the md5 [[pqCodebook]] (oracle-reproducible) or the
+    * raw Lloyd-trained k*=256 one (the n61/n66 pairing at join scale) —
+    * and the shortlist kernel: [[knnCandidates]] at R over the md5 IVF
+    * cells, then [[rerankJoinTail]]. `asymmetric` = false ranks codes
+    * against codes by SDC (n78/n80): the pair table rides in the task
+    * binary, which Spark itself broadcasts once per stage — at k*=256
+    * that is nSub·256² longs (4 MiB), the FAISS-resident table size, NOT
+    * a per-row or per-task cost; at k*=16 it is 16 KiB. `asymmetric` =
+    * true ranks the probe row's raw integer vector against the index
+    * codes by ADC (n81/n84). The SDC join keeps the plain cell join
+    * (BASELINE round 18: n78 unchanged by design); the ADC one takes the
+    * n65 size crossover (same verify-stage serialization risk under AQE's
+    * broadcast conversion at scale). */
+  private def pqRerankJoin(emb: DataFrame, codebook: Array[Long], nCode: Int,
+                           asymmetric: Boolean, k: Int, r: Int,
+                           nProbe: Int): DataFrame = {
+    import graft.functions.ProductQuantization
     val v = transform(col("embedding"), x => x.cast("double"))
-    val dots = graft.functions.QuantizedDots(v, ivfDirs, 64, IvfNList)
-    def codesCol(c: Column): Column = graft.functions.ProductQuantization
-      .encode(c, codebook, PqSubDim, PqNSub, nCode)
-    val index = emb.select(col("vec_id").as("nbr"),
-      codesCol(v).as("un"),
-      ivfCellCol(v).cast("int").as("cell"))
-    val scored = emb.select(col("vec_id"), codesCol(v).as("u"),
-      posexplode(dots).as(Seq("cell", "score")))
-    val probed = graft.plans.TopKPerKey(scored, Seq(col("vec_id")),
-      Seq(col("score").desc, col("cell")), nProbe)
-    val cands = probed.select(col("vec_id"), col("u"), col("cell"))
-      .join(index, "cell")
-      .filter(col("vec_id") =!= col("nbr"))
-      .withColumn("sdist", graft.functions.ProductQuantization
-        .sdc(col("u"), col("un"), pairTable, PqNSub, nCode))
-    // the R-cut heap sees (vec_id, nbr, sdist) — codes and vectors have
-    // both left the stream; nulls rank last and drop AFTER the cut (the
-    // knnJoinVerify contract: a pre-cut isNotNull pushes into the join)
-    val shortlist = graft.plans.TopKPerKey(
-      cands.select(col("vec_id"), col("nbr"), col("sdist")),
-      Seq(col("vec_id")), Seq(col("sdist").asc_nulls_last, col("nbr")), r)
-      .filter(col("sdist").isNotNull)
-      .select("vec_id", "nbr")
-    rerankJoinTail(emb, shortlist, k)
+    val codes = ProductQuantization.encode(v, codebook, PqSubDim, PqNSub, nCode)
+    val (probeEnc, verify, scoreName, largeProbe) =
+      if (asymmetric) {
+        val qInt = transform(v, x =>
+          floor(x * lit(graft.functions.QuantizedDots.Scale)).cast("long"))
+        (qInt, (q: Column, c: Column) =>
+          ProductQuantization.adcq(q, c, codebook, PqSubDim, PqNSub, nCode),
+          "adist", cellJoinLargeProbe(emb))
+      } else {
+        val pairTable = ProductQuantization
+          .pairDistanceTable(codebook, PqSubDim, PqNSub, nCode)
+        (codes, (a: Column, b: Column) =>
+          ProductQuantization.sdc(a, b, pairTable, PqNSub, nCode),
+          "sdist", false)
+      }
+    val (scored, index) = ivfProbeSides(emb, v, probeEnc, codes)
+    val shortlist = knnCandidates(probeCut(scored, nProbe), index, r,
+      verify, scoreName, ascending = true, largeProbe)
+    rerankJoinTail(emb, shortlist.select("vec_id", "nbr"), k)
   }
 
   /** The exact-re-rank tail shared by every batched two-stage join
@@ -1049,12 +1037,9 @@ object Similarity {
    */
   def pqKnnJoinRerankTrained(emb: DataFrame, k: Int = 3,
                              r: Int = PqJoinRerankR,
-                             nProbe: Int = IvfNProbe): DataFrame = {
-    val cb = trainedPqCodebook(emb, PqNCodeHi)
-    val pt = graft.functions.ProductQuantization
-      .pairDistanceTable(cb, PqSubDim, PqNSub, PqNCodeHi)
-    pqKnnJoinRerankWith(emb, cb, PqNCodeHi, pt, k, r, nProbe)
-  }
+                             nProbe: Int = IvfNProbe): DataFrame =
+    pqRerankJoin(emb, trainedPqCodebook(emb, PqNCodeHi), PqNCodeHi,
+      asymmetric = false, k, r, nProbe)
 
   def pqKnnJoinRerankTrainedQuery(spark: SparkSession, dir: String): DataFrame =
     pqKnnJoinRerankTrained(embeddings(spark, dir))
@@ -1084,42 +1069,7 @@ object Similarity {
   def pqKnnJoinRerankAdc(emb: DataFrame, k: Int = 3,
                          r: Int = PqJoinRerankR,
                          nProbe: Int = IvfNProbe): DataFrame =
-    pqKnnJoinRerankAdcWith(emb, pqCodebook, PqNCode, k, r, nProbe)
-
-  /** The shared asymmetric two-stage join plan, parameterized on the
-    * codebook — n81 passes the md5 [[pqCodebook]] (oracle-reproducible),
-    * n84 the raw Lloyd-trained k*=256 one (the n78/n80 pairing with the
-    * ADC shortlist). */
-  private def pqKnnJoinRerankAdcWith(emb: DataFrame, codebook: Array[Long],
-                                     nCode: Int, k: Int, r: Int,
-                                     nProbe: Int): DataFrame = {
-    val v = transform(col("embedding"), x => x.cast("double"))
-    val dots = graft.functions.QuantizedDots(v, ivfDirs, 64, IvfNList)
-    val qInt = transform(v, x =>
-      floor(x * lit(graft.functions.QuantizedDots.Scale)).cast("long"))
-    val index = emb.select(col("vec_id").as("nbr"),
-      graft.functions.ProductQuantization
-        .encode(v, codebook, PqSubDim, PqNSub, nCode).as("un"),
-      ivfCellCol(v).cast("int").as("cell"))
-    val scored = emb.select(col("vec_id"), qInt.as("u"),
-      posexplode(dots).as(Seq("cell", "score")))
-    val probed = graft.plans.TopKPerKey(scored, Seq(col("vec_id")),
-      Seq(col("score").desc, col("cell")), nProbe)
-    // the size crossover guards this cell join like n65's (same verify-
-    // stage serialization risk under AQE's broadcast conversion at scale)
-    val cands = cellJoinWithCrossover(
-        probed.select(col("vec_id"), col("u"), col("cell")), index,
-        cellJoinLargeProbe(emb))
-      .filter(col("vec_id") =!= col("nbr"))
-      .withColumn("adist", graft.functions.ProductQuantization
-        .adcq(col("u"), col("un"), codebook, PqSubDim, PqNSub, nCode))
-    val shortlist = graft.plans.TopKPerKey(
-      cands.select(col("vec_id"), col("nbr"), col("adist")),
-      Seq(col("vec_id")), Seq(col("adist").asc_nulls_last, col("nbr")), r)
-      .filter(col("adist").isNotNull)
-      .select("vec_id", "nbr")
-    rerankJoinTail(emb, shortlist, k)
-  }
+    pqRerankJoin(emb, pqCodebook, PqNCode, asymmetric = true, k, r, nProbe)
 
   def pqKnnJoinRerankAdcQuery(spark: SparkSession, dir: String): DataFrame =
     pqKnnJoinRerankAdc(embeddings(spark, dir))
@@ -1141,8 +1091,8 @@ object Similarity {
   def pqKnnJoinRerankAdcTrained(emb: DataFrame, k: Int = 3,
                                 r: Int = PqJoinRerankR,
                                 nProbe: Int = IvfNProbe): DataFrame =
-    pqKnnJoinRerankAdcWith(emb, trainedPqCodebook(emb, PqNCodeHi),
-      PqNCodeHi, k, r, nProbe)
+    pqRerankJoin(emb, trainedPqCodebook(emb, PqNCodeHi), PqNCodeHi,
+      asymmetric = true, k, r, nProbe)
 
   def pqKnnJoinRerankAdcTrainedQuery(spark: SparkSession, dir: String): DataFrame =
     pqKnnJoinRerankAdcTrained(embeddings(spark, dir))
@@ -1484,7 +1434,7 @@ object Similarity {
   /** The nProbe best cells of a double-vector column, as a map-side
     * array (dot DESC, cell ASC — the n07 probe rule): an 8-element
     * comparator sort per row, no shuffle. Equal by construction to the
-    * TopKPerKey cut [[knnJoinCore]] applies to the posexploded scores
+    * TopKPerKey cut [[probeCut]] applies to the posexploded scores
     * (integer dots ⇒ no float ties; the comparator is total), so an
     * index can precompute its members' probe sets AT INGEST — the n71
     * incremental kNN join reads them back instead of re-shuffling the

@@ -1,14 +1,16 @@
 package graft.tools
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
- * Dev tool (round-19 plan evidence): the ABOVE-THRESHOLD n65 plan — the
- * crossover cell join over a 16k synthetic corpus (the PlanShapeSpec
- * fixture, just past the 3 MiB source threshold). Run in the pre-salt
- * tree it prints the unsalted pinned shuffled-hash plan; in the round-19
- * tree, the salted (cell, salt) plan. Bench-point plans sit below the
- * threshold and are unchanged either way.
+ * Dev tool (round-19 plan evidence): the ABOVE-THRESHOLD plans of n65,
+ * n78 and n81 over a 16k synthetic corpus (the PlanShapeSpec fixture,
+ * just past the 3 MiB source threshold). n65 and n81 take the crossover
+ * cell join — unsalted pinned shuffled-hash before round 19, salted
+ * (cell, salt) since; n78 keeps the plain cell join by design. Diffing
+ * this output before and after a refactor checks the cell-join policy of
+ * each query. Bench-point plans sit below the threshold.
  *
  * Usage: runMain graft.tools.PlanPairCellJoin
  */
@@ -23,8 +25,14 @@ object PlanPairCellJoin {
         lit(0).as("label"))
       .repartition(8).write.mode("overwrite").parquet(dir.toString)
     val big = spark.read.parquet(dir.toString)
-    println("----- PLANPAIR n65 above-threshold cell join -----")
-    graft.ops.Similarity.pqKnnJoin(big).explain("formatted")
+    Seq[(String, DataFrame => DataFrame)](
+      "n65" -> (graft.ops.Similarity.pqKnnJoin(_)),
+      "n78" -> (graft.ops.Similarity.pqKnnJoinRerank(_)),
+      "n81" -> (graft.ops.Similarity.pqKnnJoinRerankAdc(_))
+    ).foreach { case (name, q) =>
+      println(s"----- PLANPAIR $name above-threshold cell join -----")
+      q(big).explain("formatted")
+    }
     spark.stop()
   }
 }

@@ -140,33 +140,6 @@ object ProbePqJoinScale {
             f"n78=$s78%.2f s ($m78%.1f MiB)")
         }
         spark.conf.set("spark.sql.adaptive.enabled", "true")
-        // targeted fix candidate: keep AQE, hint the cell join to a
-        // merge (shuffled) strategy via the dev path
-        val pt16 = graft.functions.ProductQuantization.pairDistanceTable(
-          graft.ops.Similarity.debugPqCodebook, 8, 8, 16)
-        val (sMj, mMj) = measure {
-          graft.ops.Similarity.pqKnnJoinDev(emb,
-            (a, b) => graft.functions.ProductQuantization.sdc(a, b, pt16, 8, 16),
-            mergeJoin = true)
-            .write.format("noop").mode("overwrite").save()
-        }
-        println(f"AQEEXP n=$n%d aqe=true mergeHint n65=$sMj%.2f s ($mMj%.1f MiB)")
-      }
-      // k-isolation experiment (round 17: the n=20000 inversion — n78,
-      // which CONTAINS n65's stage 1, measured 5x faster than n65): same
-      // dev plan, same verify, only the final heap k varies
-      if (args.contains("kexp")) {
-        Seq(3, 20, 100).foreach { kk =>
-          val (s, mib) = measure {
-            graft.ops.Similarity.pqKnnJoinDev(emb,
-              (a, b) => graft.functions.ProductQuantization.sdc(a, b,
-                graft.functions.ProductQuantization.pairDistanceTable(
-                  graft.ops.Similarity.debugPqCodebook, 8, 8, 16), 8, 16),
-              k = kk)
-              .write.format("noop").mode("overwrite").save()
-          }
-          println(f"KEXP n=$n%d k=$kk sdc_join=$s%.2f s ($mib%.1f MiB shuffled)")
-        }
       }
       println(f"PQJOINSCALE n=$n%d n60_float=$floatS%.2f s ($floatMiB%.1f MiB shuffled) " +
         f"n65_sdc=$sdcS%.2f s ($sdcMiB%.1f MiB shuffled) " +

@@ -3,11 +3,12 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** The one local-session builder behind every driver-contract main and dev
-  * tool (`Verify`, `Bench`, `PlanAudit`, `TimeOne`, the probes) — the same
-  * divergence-risk argument that unified the incremental state machines:
-  * rounds 10–12 copied this block four times and each new config
-  * (`maxPlanStringLength` for the status-store OOM, the partition-discovery
-  * threshold for the bucketed level trees) had to be hand-propagated.
+  * tool (`Verify`, `Bench`, `PlanAudit`, `PlanDump`, `TimeOne`, the
+  * probes) — the same divergence-risk argument that unified the
+  * incremental state machines: rounds 10–12 copied this block four times
+  * and each new config (`maxPlanStringLength` for the status-store OOM,
+  * the partition-discovery threshold for the bucketed level trees) had to
+  * be hand-propagated.
   *
   * Config notes, kept once here:
   *  - `shuffle.partitions` = the session's core count, not Spark's 200
@@ -41,7 +42,7 @@ object Sessions {
   }
 
   def local(cpus: Int, logLevel: String = "WARN"): SparkSession = {
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse-").toString)
       .master(s"local[$cpus]")
@@ -52,20 +53,6 @@ object Sessions {
       // the driver's bench keeps the default and stays comparable.
       .config("spark.sql.shuffle.partitions",
         envInt("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus).toString)
-    // 100 TB posture knobs (guide §2.2/§2.3/§9), set ONLY when the env
-    // names them so the local bench keeps Spark's defaults (advisory 64m,
-    // lz4) and stays comparable round over round:
-    //  - SPARK_GRAFT_ADVISORY_PARTITION_BYTES: AQE coalescing target —
-    //    size post-shuffle partitions into the 100 MB–1 GB band at scale
-    //    (e.g. "256m") instead of the 64 MB local default;
-    //  - SPARK_GRAFT_SHUFFLE_CODEC: shuffle/spill compression codec —
-    //    "zstd" usually wins markedly on ratio at cluster NIC speeds for
-    //    a bit more CPU; measure per §2.3, there is no universal answer.
-    sys.env.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES").foreach(v =>
-      builder.config("spark.sql.adaptive.advisoryPartitionSizeInBytes", v))
-    sys.env.get("SPARK_GRAFT_SHUFFLE_CODEC").foreach(v =>
-      builder.config("spark.io.compression.codec", v))
-    val spark = builder
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

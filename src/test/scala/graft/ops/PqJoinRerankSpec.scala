@@ -88,6 +88,15 @@ class PqJoinRerankSpec extends AnyFunSuite {
     val want = localRerank(rows, k = 3, r = 100)
     assert(got.size === want.size)
     assert(got === want)
+    // n81 runs the same two-stage pipeline with the asymmetric shortlist
+    // (md5 codebook, raw integer query against index codes): the in-suite
+    // form of its DuckDB hash gate
+    val gotAdc = Similarity.pqKnnJoinRerankAdc(emb).collect()
+      .map(rw => (rw.getLong(0), rw.getLong(1), rw.getLong(2), rw.getLong(3)))
+      .toSeq
+    val wantAdc = localRerank(rows, k = 3, r = 100, asymmetric = true)
+    assert(gotAdc.size === wantAdc.size)
+    assert(gotAdc === wantAdc)
   }
 
   test("n78 planted near-duplicates surface through shortlist + re-rank") {

@@ -363,6 +363,17 @@ class PlanShapeSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(p.contains("ShuffledHashJoin"),
       s"above-threshold n65 cell join is not shuffled-hash:\n$p")
+    // the cell-join policy of the two-stage joins, which share n65's
+    // candidate stage: n81 takes the same salted (cell, salt) crossover;
+    // n78 keeps the plain cell join by design (BASELINE round 18)
+    val p81 = graft.ops.Similarity.pqKnnJoinRerankAdc(big)
+      .queryExecution.executedPlan.toString
+    assert("ShuffledHashJoin \\[cell#\\d+, salt#\\d+\\]".r.findFirstIn(p81).isDefined,
+      s"above-threshold n81 cell join is not the salted shuffled-hash join:\n$p81")
+    val p78 = graft.ops.Similarity.pqKnnJoinRerank(big)
+      .queryExecution.executedPlan.toString
+    assert(!p78.contains("salt"),
+      s"n78 cell join took the crossover; it keeps the plain join:\n$p78")
     // the oracle-gated bench point stays below the threshold: its
     // measured-optimal AQE plan (and its hash) are untouched
     assert(!graft.ops.Similarity.cellJoinLargeProbe(
